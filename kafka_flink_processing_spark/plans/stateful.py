@@ -280,53 +280,25 @@ def pnl_positions_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "streaming_pnl_tws",
+    "streaming_pnl",
     oracle=f"{_PNL_REPLAY_SQL} SELECT {_PNL_COLS} FROM pnl",
-    doc="W2 replay on Spark 4's transformWithStateInPandas — the "
-        "reference-matching state layout (lastPrice ValueState + a REAL "
-        "per-account MapState, PnlAndExposureJob.java:107-110) run as a "
-        "stream and drained availableNow, hash-gated against the same "
-        "recursive-CTE replay oracle as the batch fold. This is the "
-        "driver-verifiable face of the tws port (r7 shipped it weak: the "
-        "MapState read-back lost the long field — fixed r8 with typed "
-        "puts, and the write set is O(touched accounts) per batch). "
-        "Requires the RocksDB state-store provider (bundled rocksdbjni); "
-        "the conf is set and restored around the drain. Scale: identical "
-        "exchange structure to streaming_pnl (one hub-keyed shuffle), "
-        "but RocksDB point puts per touched account instead of rewriting "
-        "one JSON blob per hub per batch.",
+    doc="W2 via Structured Streaming: the production pnl_job fold "
+        "(streaming/stateful.py::streaming_pnl, applyInPandasWithState "
+        "with the lastPrice + per-account book per hub) run as a stream "
+        "and drained availableNow on the default state store, hash-gated "
+        "against the same recursive-CTE replay oracle as the batch fold "
+        "(unified batch/streaming semantics).",
 )
-def streaming_pnl_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.session import ensure_tws_ready
+def streaming_pnl_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_processing_spark.streaming.sinks import (
         drain_streaming_multi,
     )
-    from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_pnl_tws,
-    )
+    from kafka_flink_processing_spark.streaming.stateful import streaming_pnl
 
-    if not ensure_tws_ready(spark):
-        raise RuntimeError(
-            "transformWithState needs google.protobuf in Spark's Python "
-            "workers; neither a wheel nor the vendored runtime is present "
-            "on this box (env-gated, like the Kafka sources)")
     trades, prices = derive_market(spark, sf_dir)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
-        return drain_streaming_multi(
-            {"t": trades, "p": prices},
-            lambda s: streaming_pnl_tws(s["t"], s["p"]), "pnl_tws")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return drain_streaming_multi(
+        {"t": trades, "p": prices},
+        lambda s: streaming_pnl(s["t"], s["p"]), "pnl")
 
 
 # pnl_positions_sliced was DEREGISTERED as a separate query in r4 (r3
@@ -581,55 +553,6 @@ def streaming_forecast_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
         prices, lambda s: streaming_sma_forecast(s, seq_col="tick_id"),
         "sma").select("ts", "hub", "price_mwh", "sma5", "sma20",
                       "forecast_next")
-
-
-@register(
-    "streaming_forecast_sma_tws",
-    oracle=_STREAM_SMA_ORACLE,
-    doc="W1 on Spark 4's transformWithStateInPandas — completes the "
-        "state-layout parity story beside the PnL port: the reference's "
-        "ListState ring buffer (ForecastsJob.java:77-81) is a REAL "
-        "ListState here (bounded at 20 doubles, O(1) rewrite per hub "
-        "per batch), where applyInPandasWithState had to encode it as "
-        "an array column in a flat struct. Drained availableNow and "
-        "hash-gated against the same lag-chain SQL oracle as the batch "
-        "and applyInPandasWithState faces; stop-and-restart-from-"
-        "checkpoint pinned in tests/test_streaming.py. Requires the "
-        "RocksDB state store (conf set and restored around the drain).",
-)
-def streaming_forecast_sma_tws_q(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    from kafka_flink_processing_spark.session import ensure_tws_ready
-    from kafka_flink_processing_spark.streaming.sinks import (
-        drain_streaming_result,
-    )
-    from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_sma_forecast_tws,
-    )
-
-    if not ensure_tws_ready(spark):
-        raise RuntimeError(
-            "transformWithState needs google.protobuf in Spark's Python "
-            "workers; neither a wheel nor the vendored runtime is present "
-            "on this box (env-gated, like the Kafka sources)")
-    _, prices = derive_market(spark, sf_dir)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
-        return drain_streaming_result(
-            prices, lambda s: streaming_sma_forecast_tws(s, seq_col="tick_id"),
-            "sma_tws").select("ts", "hub", "price_mwh", "sma5", "sma20",
-                              "forecast_next")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 # --- winsorized statistics: rank-based exact percentile bounds + clipping

@@ -10,99 +10,13 @@ pandas-UDF boundary.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
 # On a real cluster these come from spark-submit; the env vars are the local
 # test harness knobs (driver sets SPARK_GRAFT_CPUS for bench).
 _CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-
-
-def ensure_protobuf_for_tws() -> bool:
-    """Make `google.protobuf` reachable in Spark's Python workers when no
-    protobuf wheel is installed (transformWithStateInPandas needs it for
-    the state-server protocol) by putting the sitecustomize shim dir
-    (vendor_pb/ — see its docstring) on PYTHONPATH. Spark merges the
-    JVM's inherited PYTHONPATH into every worker's, so this must run
-    BEFORE the JVM starts; get_spark() calls it first. Returns True if
-    protobuf will be importable in workers (wheel present or shim wired),
-    False if the box has neither — callers (the TWS tests) can skip."""
-    import importlib.util
-
-    if importlib.util.find_spec("google") is not None and \
-            importlib.util.find_spec("google.protobuf") is not None:
-        return True
-    vendored = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-    if not os.path.isdir(os.path.join(vendored, "google", "protobuf")):
-        return False
-    shim_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "vendor_pb")
-    parts = os.environ.get("PYTHONPATH", "")
-    if shim_dir not in parts.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (shim_dir + os.pathsep + parts
-                                    if parts else shim_dir)
-    # PYTHONPATH alone is NOT enough: the transformWithState driver-side
-    # StreamingPythonRunner rebuilds the worker's PYTHONPATH from scratch
-    # (no merge with the JVM env). Interpose on the interpreter instead:
-    # a wrapper script that re-prepends the shim dir and execs the real
-    # python (vendor_pb/python_with_pb). Only set when the user hasn't
-    # already pointed PYSPARK_PYTHON somewhere custom beyond the default.
-    wrapper = os.path.join(shim_dir, "python_with_pb")
-    # Fall back to sys.executable, not `python` from PATH: in a venv
-    # launch where PATH python differs from the driver interpreter, the
-    # wrapper must exec the interpreter the driver actually runs
-    # (r8 advisor).
-    import sys
-    current = os.environ.get("PYSPARK_PYTHON") or sys.executable
-    if current != wrapper and os.access(wrapper, os.X_OK):
-        os.environ["KFPS_REAL_PYTHON"] = current
-        os.environ["PYSPARK_PYTHON"] = wrapper
-    return True
-
-
-def ensure_tws_ready(spark: SparkSession) -> bool:
-    """Runtime (post-JVM) variant of ensure_protobuf_for_tws for sessions
-    this engine did not build (the graded driver's vanilla session is
-    one): the transformWithState DRIVER-SIDE worker takes its interpreter
-    from sc.pythonExec, which pyspark reads at UDF-CREATION time — so
-    pointing it at the interposing wrapper works even after the JVM is
-    up, where env-var wiring alone cannot (the JVM captured its env at
-    launch). The wrapper also prepends this repo's root to the worker
-    PYTHONPATH, because StreamingPythonRunner rebuilds the worker's
-    PYTHONPATH without the context's addPyFile entries — ensure_shipped's
-    zip never reaches the tws driver worker. Idempotent; False when the
-    box has neither a protobuf wheel nor the vendored runtime (callers
-    env-gate, like the Kafka tests)."""
-    if not ensure_protobuf_for_tws():
-        return False
-    # Route through the wrapper even when a protobuf WHEEL made
-    # ensure_protobuf_for_tws return True without wiring it (r8 review):
-    # the repo-root PYTHONPATH shipping is needed regardless of how
-    # protobuf is satisfied, or the tws driver worker cannot unpickle
-    # the processor outside the repo cwd. The wrapper execs
-    # $KFPS_REAL_PYTHON (recorded here when the env var can still reach
-    # workers, i.e. pre-JVM) or `python` from PATH — on a wheel box any
-    # interpreter on PATH sees the same site-packages.
-    wrapper = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "vendor_pb", "python_with_pb")
-    if os.access(wrapper, os.X_OK):
-        import sys
-
-        sc = spark.sparkContext
-        if getattr(sc, "pythonExec", None) != wrapper:
-            # Rerouting sc.pythonExec affects EVERY Python UDF created
-            # afterwards, not just tws — so the wrapper must exec the
-            # interpreter this driver runs, not whatever `python` PATH
-            # resolves to (a venv-launched vanilla session can differ).
-            # Record it both in os.environ (pre-JVM spawns inherit it)
-            # and sc.environment (PythonWorkerFactory injects these into
-            # the worker process env post-JVM). r8 advisor fix.
-            real = os.environ.get("KFPS_REAL_PYTHON") or sys.executable
-            os.environ.setdefault("KFPS_REAL_PYTHON", real)
-            if getattr(sc, "environment", None) is not None:
-                sc.environment.setdefault("KFPS_REAL_PYTHON", real)
-            sc.pythonExec = wrapper
-    return True
 
 
 def get_spark(app_name: str = "kafka_flink_processing_spark",
@@ -113,7 +27,10 @@ def get_spark(app_name: str = "kafka_flink_processing_spark",
     cluster you would size it to ~2-3x total cores instead (or let AQE
     coalesce from a higher initial number).
     """
-    ensure_protobuf_for_tws()  # must precede JVM start (worker PYTHONPATH)
+    # Python workers run the driver's interpreter (Spark's own fallback is
+    # `python3` from PATH, which can differ in a venv launch). pyspark
+    # reads it when it creates the SparkContext, so set it before that.
+    os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
     builder = (
         SparkSession.builder
         .master(os.environ.get("SPARK_MASTER", f"local[{_CPUS}]"))

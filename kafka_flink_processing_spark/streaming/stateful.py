@@ -7,6 +7,9 @@ Structured Streaming equivalent: groupBy(key).applyInPandasWithState with
 explicit state schemas; records are processed in (ts, kind, trade_id) order
 WITHIN each micro-batch (the engine's documented refinement of the
 reference's arrival-order nondeterminism), and state carries across batches.
+applyInPandasWithState is the engine's only streaming state API; the one
+variant that needs timers (book-expiry TTL, streaming_pnl_ttl) uses its
+event-time timeout.
 
 The arithmetic is shared with the batch operators (same Python float fold
 for PnL via netting.HubFold; the SMA averages sum oldest->newest exactly
@@ -53,21 +56,34 @@ _SMA_OUT = T.StructType([
 _SMA_STATE = T.StructType([T.StructField("buf", T.ArrayType(T.DoubleType()))])
 
 
+def _in_order(pdfs: Iterator[pd.DataFrame],
+              order: list[str]) -> pd.DataFrame | None:
+    """One group's micro-batch rows as ONE frame in the documented total
+    order, or None when the call carries no rows (a timed-out group).
+    Arrow hands a group over in chunks of at most
+    spark.sql.execution.arrow.maxRecordsPerBatch rows; sorting chunk by
+    chunk would fold a large group out of event-time order."""
+    chunks = list(pdfs)
+    if not chunks:
+        return None
+    return pd.concat(chunks, ignore_index=True).sort_values(
+        order, kind="mergesort")
+
+
 def _sma_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
             state: GroupState) -> Iterator[pd.DataFrame]:
     buf: list[float] = list(state.get[0]) if state.exists else []
     hub = key[0]
+    pdf = _in_order(pdfs, ["ts", "seq"])
     out: list[dict[str, Any]] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ts", "seq"], kind="mergesort")
-        for ts, px in zip(pdf["ts"], pdf["price_mwh"]):
-            buf.append(float(px))
-            if len(buf) > 20:          # addAndTrim, ForecastsJob.java:77-81
-                del buf[0]
-            sma5 = sum(buf[-5:]) / min(len(buf), 5)
-            sma20 = sum(buf) / len(buf)
-            out.append({"ts": ts, "hub": hub, "price_mwh": px, "sma5": sma5,
-                        "sma20": sma20, "forecast_next": sma5})
+    for ts, px in zip(pdf["ts"], pdf["price_mwh"]):
+        buf.append(float(px))
+        if len(buf) > 20:              # addAndTrim, ForecastsJob.java:77-81
+            del buf[0]
+        sma5 = sum(buf[-5:]) / min(len(buf), 5)
+        sma20 = sum(buf) / len(buf)
+        out.append({"ts": ts, "hub": hub, "price_mwh": px, "sma5": sma5,
+                    "sma20": sma20, "forecast_next": sma5})
     state.update((buf,))
     yield pd.DataFrame(out, columns=[f.name for f in _SMA_OUT.fields])
 
@@ -103,47 +119,50 @@ _PNL_OUT = T.StructType([
     T.StructField("unrealized_pnl", T.DoubleType()),
     T.StructField("total_pnl", T.DoubleType()),
 ])
+_PNL_COLS = [f.name for f in _PNL_OUT.fields]
 # accounts dict serialized to JSON: applyInPandasWithState state schemas are
 # flat structs; #accounts per hub is small and bounded (reference MapState)
 _PNL_STATE = T.StructType([
     T.StructField("last_price", T.DoubleType()),
     T.StructField("accounts_json", T.StringType()),
 ])
+# streaming_pnl_ttl adds each account's last trade (epoch ms) to the book
+_PNL_TTL_STATE = T.StructType(_PNL_STATE.fields + [
+    T.StructField("last_trade_json", T.StringType()),
+])
+
+
+def _restore_fold(state: GroupState) -> HubFold:
+    if not state.exists:
+        return HubFold()
+    last_price, accounts_json = state.get[:2]
+    return HubFold(last_price, json.loads(accounts_json))
+
+
+def _fold(fold: HubFold, pdfs: Iterator[pd.DataFrame]
+          ) -> tuple[list[dict], pd.DataFrame | None]:
+    """Fold one hub's micro-batch into `fold`: the emitted rows, and the
+    rows in fold order (None for a call without rows)."""
+    pdf = _in_order(pdfs, ["ts", "kind", "trade_id"])
+    out: list[dict[str, Any]] = []
+    if pdf is not None:
+        for rec in pdf.to_dict("records"):
+            out.extend(fold.process(rec))
+    return out, pdf
+
+
+def _book(fold: HubFold) -> tuple[float | None, str]:
+    last_price, accounts = fold.snapshot()
+    return last_price, json.dumps(accounts, sort_keys=True)
 
 
 def _pnl_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
             state: GroupState) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        last_price, accounts_json = state.get
-        fold = HubFold(last_price, json.loads(accounts_json))
-    else:
-        fold = HubFold()
-    out: list[dict[str, Any]] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ts", "kind", "trade_id"], kind="mergesort")
-        for rec in pdf.to_dict("records"):
-            out.extend(fold.process(rec))
-    last_price, accounts = fold.snapshot()
-    state.update((last_price, json.dumps(accounts, sort_keys=True)))
-    yield pd.DataFrame(out, columns=[f.name for f in _PNL_OUT.fields])
+    fold = _restore_fold(state)
+    out, _pdf = _fold(fold, pdfs)
+    state.update(_book(fold))
+    yield pd.DataFrame(out, columns=_PNL_COLS)
 
-
-def streaming_pnl(trades: DataFrame, prices: DataFrame) -> DataFrame:
-    """Two-input keyed co-processing as tagged union + stateful fold.
-
-    trades: (trade_id, ts, account, hub, side, mw, price_mwh) stream
-    prices: (ts, hub, price_mwh) stream
-    """
-    ensure_shipped(trades.sparkSession)
-    return (_tagged_union(trades, prices)
-            .groupBy("hub")
-            .applyInPandasWithState(_pnl_fn, _PNL_OUT, _PNL_STATE,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
-# ---------------------------------------------------------------------------
-# W2 streaming on the Spark-4 primitive: transformWithStateInPandas
-# ---------------------------------------------------------------------------
 
 def _tagged_union(trades: DataFrame, prices: DataFrame) -> DataFrame:
     t = trades.select(
@@ -160,282 +179,68 @@ def _tagged_union(trades: DataFrame, prices: DataFrame) -> DataFrame:
     return t.unionByName(p)
 
 
-def book_puts(before: dict[str, tuple[int, float, float]],
-              after: dict) -> dict[str, tuple[int, float, float]]:
-    """The MapState puts a micro-batch owes: only accounts whose
-    (pos, avg, realized) changed — O(touched) RocksDB point puts per hub
-    per batch, not O(book) (prices only move lastPrice; fills via
-    apply_fill are the only book mutation).
+def streaming_pnl(trades: DataFrame, prices: DataFrame) -> DataFrame:
+    """Two-input keyed co-processing as tagged union + stateful fold.
 
-    Also enforces type discipline at the state boundary: the tagged-union
-    mw column is nullable (NULL on price rows), so pandas hands the fold
-    FLOAT64 quantities and pos accumulates as an integral float. Writing
-    7.0 into the `pos long` state field makes the JVM row decoder store
-    NULL silently (found the hard way: batch-2 read-back returned
-    (None, avg, realized)) — coerce to the declared types before every
-    put. `before` must hold already-normalized (int, float, float)
-    tuples, as the read-back loop produces."""
-    puts: dict[str, tuple[int, float, float]] = {}
-    for acct, st in after.items():
-        st = (int(st[0]), float(st[1]), float(st[2]))
-        if before.get(acct) != st:
-            puts[acct] = st
-    return puts
-
-
-class PnlProcessor:
-    """StatefulProcessor port of the PnL co-process fold onto Spark 4's
-    transformWithStateInPandas — the state layout finally matches the
-    reference ONE-TO-ONE (PnlAndExposureJob.java:107-110): lastPrice is a
-    ValueState<double> and the per-account book is a real MapState keyed
-    by account, instead of applyInPandasWithState's single flat struct
-    with the account map crammed into a JSON string. At scale that's the
-    difference that matters: RocksDB updates only the touched accounts
-    per micro-batch (point puts) rather than rewriting one ever-growing
-    blob per hub. The fold arithmetic is the SAME HubFold shared
-    with the batch operator and the spec replay, so output parity with
-    streaming_pnl and the batch plan is structural. Book-expiry TTL for
-    account churn lives in the PnlProcessorTtl subclass (event-time
-    timers evict long-flat accounts); this base processor matches the
-    reference exactly — Flink never evicts either.
-
-    Declared lazily (class body imports nothing Spark-streaming-specific
-    at module import): the base class lives in
-    pyspark.sql.streaming.stateful_processor on Spark 4+.
+    trades: (trade_id, ts, account, hub, side, mw, price_mwh) stream
+    prices: (ts, hub, price_mwh) stream
     """
-
-    def init(self, handle) -> None:
-        self._last = handle.getValueState("lastPrice", "price double")
-        self._accounts = handle.getMapState(
-            "accounts", "account string",
-            "pos long, avg double, realized double")
-
-    def _fold_batch(self, rows: Iterator[pd.DataFrame]):
-        """Shared micro-batch fold: restore state, process the batch in
-        the documented total order, write back the touched state.
-        Returns (sorted batch pdf, emitted rows, post-batch book) so
-        subclasses (TTL) can add bookkeeping without re-folding."""
-        last = self._last.get()
-        accounts: dict[str, tuple[int, float, float]] = {}
-        if self._accounts.exists():
-            for k, v in self._accounts.iterator():
-                accounts[k[0]] = (int(v[0]), float(v[1]), float(v[2]))
-        before = dict(accounts)
-        fold = HubFold(None if last is None else float(last[0]), accounts)
-        # ONE global sort over the micro-batch's rows for this key (the
-        # documented total order), independent of Arrow chunking
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "kind", "trade_id"], kind="mergesort")
-        out: list[dict[str, Any]] = []
-        for rec in pdf.to_dict("records"):
-            out.extend(fold.process(rec))
-        last_price, accounts = fold.snapshot()
-        if last_price is not None:
-            self._last.update((float(last_price),))
-        for acct, st in book_puts(before, accounts).items():
-            self._accounts.updateValue((acct,), st)
-        return pdf, out, accounts
-
-    def handleInputRows(self, key: tuple, rows: Iterator[pd.DataFrame],
-                        timer_values) -> Iterator[pd.DataFrame]:
-        _pdf, out, _book = self._fold_batch(rows)
-        yield pd.DataFrame(out, columns=[f.name for f in _PNL_OUT.fields])
-
-    def handleInitialState(self, key, initialState, timer_values) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-class PnlProcessorTtl(PnlProcessor):
-    """PnlProcessor + book-expiry TTL — the state-growth story at account
-    churn, and the first real use of the timers the tws primitive
-    brings. An account that is FLAT (position 0) and has not traded for
-    ttl_ms of EVENT time is evicted from the MapState book, so it stops
-    fanning out on every price tick and its RocksDB entries are freed;
-    accounts with open positions are never evicted regardless of age.
-
-    Mechanics: when a batch leaves an account flat, an event-time timer
-    is registered at (its last trade ts + ttl_ms); when the watermark
-    passes it, handleExpiredTimer sweeps the book and removes every
-    still-flat account whose last trade is at least ttl_ms old (a sweep,
-    so one timer can retire several accounts and re-flattened accounts
-    are caught by later timers). This variant deliberately DIVERGES from
-    the reference after the TTL (the Flink job never evicts, its state
-    grows forever — PnlAndExposureJob.java:107-110): post-eviction price
-    ticks no longer emit rows for the evicted account, which is the
-    point. Requires timeMode='eventtime', i.e. a watermark on the
-    tagged-union input (streaming_pnl_tws_ttl wires both)."""
-
-    def __init__(self, ttl_ms: int) -> None:
-        self._ttl_ms = int(ttl_ms)
-
-    def init(self, handle) -> None:
-        super().init(handle)
-        self._handle = handle
-        self._last_trade = handle.getMapState(
-            "lastTrade", "account string", "ts_ms long")
-
-    def handleInputRows(self, key: tuple, rows: Iterator[pd.DataFrame],
-                        timer_values) -> Iterator[pd.DataFrame]:
-        pdf, out, book = self._fold_batch(rows)
-        trades = pdf[pdf["kind"] == TRADE]
-        flat_at: dict[str, int] = {}
-        for acct, ts in zip(trades["account"], trades["ts"]):
-            ms = int(pd.Timestamp(ts).value // 1_000_000)
-            # typed put (r8 lesson): the declared long gets a Python int
-            self._last_trade.updateValue((acct,), (ms,))
-            if book.get(acct, (1,))[0] == 0:     # flat AFTER this batch
-                flat_at[acct] = ms
-        for ms in sorted(set(flat_at.values())):
-            self._handle.registerTimer(ms + self._ttl_ms)
-        yield pd.DataFrame(out, columns=[f.name for f in _PNL_OUT.fields])
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # parameter names MUST match the ABC's — the runtime invokes this
-        # with keyword arguments (timerValues=..., expiredTimerInfo=...)
-        expiry = expiredTimerInfo.getExpiryTimeInMs()
-        evict: list[str] = []
-        if self._accounts.exists():
-            for k, v in self._accounts.iterator():
-                acct = k[0]
-                if int(v[0]) != 0:
-                    continue                      # open position: keep
-                has_lt = self._last_trade.containsKey((acct,))
-                lt = (int(self._last_trade.getValue((acct,))[0])
-                      if has_lt else None)
-                if lt is None or lt + self._ttl_ms <= expiry:
-                    evict.append(acct)
-        for acct in evict:                        # mutate AFTER iterating
-            self._accounts.removeKey((acct,))
-            if self._last_trade.containsKey((acct,)):
-                self._last_trade.removeKey((acct,))
-        return iter(())
-
-
-def streaming_pnl_tws_ttl(trades: DataFrame, prices: DataFrame,
-                          ttl_ms: int,
-                          watermark_delay: str = "0 seconds") -> DataFrame:
-    """streaming_pnl_tws with book-expiry TTL (PnlProcessorTtl): evicts
-    accounts flat for > ttl_ms of event time. Event-time timers need a
-    watermark on the input and timeMode='eventtime'; same RocksDB
-    state-store requirement as the base port."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from kafka_flink_processing_spark.session import ensure_tws_ready
-
-    proc_cls = type("_PnlProcessorTtlTws",
-                    (PnlProcessorTtl, StatefulProcessor), {})
     ensure_shipped(trades.sparkSession)
-    ensure_tws_ready(trades.sparkSession)
-    union = _tagged_union(trades, prices).withWatermark(
-        "ts", watermark_delay)
-    return (union.groupBy("hub")
-            .transformWithStateInPandas(proc_cls(ttl_ms), _PNL_OUT,
-                                        "append", "eventtime"))
-
-
-class SmaProcessor:
-    """StatefulProcessor port of the W1 rolling-SMA forecast onto Spark
-    4's transformWithStateInPandas — state-layout parity with the
-    reference's ForecastsJob (ForecastsJob.java:77-81): the <=20-price
-    ring buffer is a REAL ListState, the exact Flink primitive the
-    reference uses (applyInPandasWithState's flat struct forces an
-    array-in-a-column encoding instead). The buffer is bounded (20
-    doubles), so the per-batch rewrite is O(1) per hub; the fold is the
-    same append-trim-average arithmetic as _sma_fn, so output parity
-    with streaming_sma_forecast and the batch window plan is structural.
-
-    Declared lazily like PnlProcessor (no Spark-4-only imports at module
-    import time)."""
-
-    def init(self, handle) -> None:
-        self._buf = handle.getListState("buf", "price double")
-
-    def handleInputRows(self, key: tuple, rows: Iterator[pd.DataFrame],
-                        timer_values) -> Iterator[pd.DataFrame]:
-        buf: list[float] = ([float(r[0]) for r in self._buf.get()]
-                            if self._buf.exists() else [])
-        hub = key[0]
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "seq"], kind="mergesort")
-        out: list[dict[str, Any]] = []
-        for ts, px in zip(pdf["ts"], pdf["price_mwh"]):
-            buf.append(float(px))
-            if len(buf) > 20:          # addAndTrim, ForecastsJob.java:77-81
-                del buf[0]
-            sma5 = sum(buf[-5:]) / min(len(buf), 5)
-            sma20 = sum(buf) / len(buf)
-            out.append({"ts": ts, "hub": hub, "price_mwh": px,
-                        "sma5": sma5, "sma20": sma20,
-                        "forecast_next": sma5})
-        # typed put (the r8 state-boundary lesson): every element coerced
-        # to the declared double before crossing into the JVM row encoder
-        self._buf.clear()
-        if buf:
-            self._buf.put([(float(v),) for v in buf])
-        yield pd.DataFrame(out, columns=[f.name for f in _SMA_OUT.fields])
-
-    def handleInitialState(self, key, initialState, timer_values) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_sma_forecast_tws(prices: DataFrame,
-                               key_col: str = "hub",
-                               ts_col: str = "ts",
-                               value_col: str = "price_mwh",
-                               seq_col: str | None = None) -> DataFrame:
-    """streaming_sma_forecast on transformWithStateInPandas (Spark 4):
-    same signature, same output, ListState ring buffer. Needs the
-    RocksDB state-store provider, like streaming_pnl_tws."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from kafka_flink_processing_spark.session import ensure_tws_ready
-
-    proc_cls = type("_SmaProcessorTws", (SmaProcessor, StatefulProcessor), {})
-    ensure_shipped(prices.sparkSession)
-    ensure_tws_ready(prices.sparkSession)
-    df = prices.select(
-        F.col(ts_col).alias("ts"), F.col(key_col).alias("hub"),
-        F.col(value_col).alias("price_mwh"),
-        (F.col(seq_col) if seq_col else F.lit(0)).cast("long").alias("seq"))
-    return (df.groupBy("hub")
-              .transformWithStateInPandas(proc_cls(), _SMA_OUT,
-                                          "append", "none"))
-
-
-def streaming_pnl_tws(trades: DataFrame, prices: DataFrame) -> DataFrame:
-    """streaming_pnl on transformWithStateInPandas (Spark 4 primitive).
-
-    Requires the RocksDB state store provider (bundled rocksdbjni jar):
-    set spark.sql.streaming.stateStore.providerClass to
-    ...execution.streaming.state.RocksDBStateStoreProvider on the session
-    or via the session helper — the HDFS-backed default store does not
-    support the transformWithState operator family.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from kafka_flink_processing_spark.session import ensure_tws_ready
-
-    # register as a real StatefulProcessor subclass without importing the
-    # Spark-4-only base at module import time
-    proc_cls = type("_PnlProcessorTws", (PnlProcessor, StatefulProcessor), {})
-    ensure_shipped(trades.sparkSession)
-    # must precede transformWithStateInPandas: the UDF captures
-    # sc.pythonExec at creation, and the tws driver worker needs the
-    # wrapper for protobuf + this package (see session.ensure_tws_ready)
-    ensure_tws_ready(trades.sparkSession)
     return (_tagged_union(trades, prices)
             .groupBy("hub")
-            .transformWithStateInPandas(proc_cls(), _PNL_OUT,
-                                        "append", "none"))
+            .applyInPandasWithState(_pnl_fn, _PNL_OUT, _PNL_STATE,
+                                    "append", GroupStateTimeout.NoTimeout))
+
+
+def _pnl_ttl_fn(ttl_ms: int):
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
+           state: GroupState) -> Iterator[pd.DataFrame]:
+        fold = _restore_fold(state)
+        last_trade: dict[str, int] = (json.loads(state.get[2])
+                                      if state.exists else {})
+        out, pdf = _fold(fold, pdfs)
+        if pdf is not None:
+            trades = pdf[pdf["kind"] == TRADE]
+            for acct, ts in zip(trades["account"], trades["ts"]):
+                last_trade[acct] = int(pd.Timestamp(ts).value // 1_000_000)
+        # evict AFTER the fold: a tick in this batch still fans out an
+        # account that expires at this batch's watermark
+        wm = state.getCurrentWatermarkMs()
+        pending: list[int] = []
+        for acct in [a for a, st in fold.accounts.items() if st.pos == 0]:
+            expiry = last_trade[acct] + ttl_ms
+            if expiry <= wm:
+                del fold.accounts[acct], last_trade[acct]
+            else:
+                pending.append(expiry)
+        state.update(_book(fold) + (json.dumps(last_trade, sort_keys=True),))
+        if pending:
+            # a group times out once its timestamp is strictly BELOW the
+            # watermark; the expiry is due at watermark >= expiry
+            state.setTimeoutTimestamp(min(pending) - 1)
+        yield pd.DataFrame(out, columns=_PNL_COLS)
+    return fn
+
+
+def streaming_pnl_ttl(trades: DataFrame, prices: DataFrame, ttl_ms: int,
+                      watermark_delay: str = "0 seconds") -> DataFrame:
+    """streaming_pnl with book-expiry TTL: an account that is FLAT
+    (position 0) and has not traded for ttl_ms of EVENT time is evicted
+    from the hub's book, so it stops fanning out on every price tick and
+    its state is freed; accounts with open positions are never evicted.
+    An evicted account that trades again restarts from a zero fold.
+
+    This deliberately DIVERGES from the reference after the TTL (the
+    Flink job never evicts; its state grows forever —
+    PnlAndExposureJob.java:107-110). Eviction runs after each group's
+    fold against the batch watermark, and through the event-time timeout
+    for hubs without rows in a batch, including the no-data batch that
+    ends an availableNow drain. tools/stream_fuzz.py::_pnl_ttl_spec is
+    the executable spec."""
+    ensure_shipped(trades.sparkSession)
+    return (_tagged_union(trades, prices)
+            .withWatermark("ts", watermark_delay)
+            .groupBy("hub")
+            .applyInPandasWithState(_pnl_ttl_fn(int(ttl_ms)), _PNL_OUT,
+                                    _PNL_TTL_STATE, "append",
+                                    GroupStateTimeout.EventTimeTimeout))

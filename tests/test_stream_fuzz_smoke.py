@@ -1,6 +1,6 @@
 """Smoke pin for tools/stream_fuzz.py — the streaming-parity fuzzer.
 
-The full sweep (17 corpora x 13 engines across two families) is a manual
+The full sweep (10 corpora x 11 engines across two families) is a manual
 tool run, recorded in COVERAGE.md per round; this smoke keeps the harness
 itself from rotting: one tiny event corpus through one stateful engine and
 one windowed-aggregation engine, plus one text corpus through the
@@ -26,16 +26,16 @@ pytestmark = pytest.mark.slow  # integration tier (see pytest.ini)
 def test_event_engines_smoke(spark):
     # events_sparse is the smallest corpus (3 rows); pnl exercises the
     # stateful fold adapter, tumbling the complete-mode windowed drain,
-    # and pnl_tws_ttl_finite the _pnl_ttl_spec replay machinery (batch
+    # and pnl_ttl_finite the _pnl_ttl_spec replay machinery (batch
     # reconstruction, watermark/timer model, dict-bag compare) — the one
     # engine whose oracle is pure Python rather than the batch plan, so
     # a spec-side refactor break fails in CI, not on the next sweep
     results = dict(stream_fuzz.run_corpus(
         spark, "events_sparse", seed=7,
-        engines=["pnl", "tumbling", "pnl_tws_ttl_finite"],
+        engines=["pnl", "tumbling", "pnl_ttl_finite"],
         tag="smoke"))
     assert results == {"pnl": True, "tumbling": True,
-                       "pnl_tws_ttl_finite": True}
+                       "pnl_ttl_finite": True}
 
 
 def test_doc_engines_smoke(spark):

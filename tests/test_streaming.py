@@ -88,55 +88,11 @@ def test_streaming_pnl_matches_batch_single_batch(spark, market, tmp_path):
     assert _rowset(got.collect()) == _rowset(want.collect())
 
 
-_ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-
-
-@pytest.fixture()
-def rocksdb_state(spark):
-    """transformWithState requires the RocksDB state store (bundled
-    rocksdbjni jar); restore the default provider afterwards so the
-    applyInPandasWithState suites keep their original store."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, _ROCKSDB)
-    yield
-    if prev is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, prev)
-
-
-def test_streaming_pnl_tws_matches_batch(spark, market, tmp_path,
-                                         rocksdb_state):
-    """The Spark-4 transformWithStateInPandas port (ValueState +
-    real MapState, reference-matching state layout) must reproduce the
-    batch plan bit-exactly, like the applyInPandasWithState original."""
-    from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_pnl_tws,
-    )
-    trades, prices = market
-    ts_stream = _stream_from(spark, trades, f"{tmp_path}/t")
-    px_stream = _stream_from(spark, prices, f"{tmp_path}/p")
-    pnl = streaming_pnl_tws(ts_stream, px_stream)
-    run_available_now(pnl, "pnl_tws_out", f"{tmp_path}/ckpt")
-    got = spark.sql("SELECT * FROM pnl_tws_out")
-    want = pnl_positions(trades, prices)
-    assert _rowset(got.collect()) == _rowset(want.collect())
-
-
-def test_streaming_pnl_tws_state_carries_across_batches(spark, market,
-                                                        tmp_path,
-                                                        rocksdb_state):
+def test_streaming_pnl_state_carries_across_batches(spark, market,
+                                                    tmp_path):
     """Split BOTH inputs at the same time cut, 1 file per trigger: the
-    ValueState last-price and the MapState account book must survive the
-    micro-batch boundary — output equals the batch replay exactly."""
-    from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_pnl_tws,
-    )
+    last price and the account book must survive the micro-batch
+    boundary — output equals the batch replay exactly."""
     trades, prices = market
     # ONE cut shared by both sources (per-source median cuts would let a
     # later-ts price precede an earlier-ts trade across the batch
@@ -154,88 +110,12 @@ def test_streaming_pnl_tws_state_carries_across_batches(spark, market,
 
     ts_stream = split_stream(trades, f"{tmp_path}/t")
     px_stream = split_stream(prices, f"{tmp_path}/p")
-    pnl = streaming_pnl_tws(ts_stream, px_stream)
-    run_available_now(pnl, "pnl_tws_mb_out", f"{tmp_path}/ckpt")
-    got = spark.sql("SELECT * FROM pnl_tws_mb_out")
+    pnl = streaming_pnl(ts_stream, px_stream)
+    run_available_now(pnl, "pnl_mb_out", f"{tmp_path}/ckpt")
+    got = spark.sql("SELECT * FROM pnl_mb_out")
     want = pnl_positions(trades, prices)
     assert got.count() == want.count()
     assert _rowset(got.collect()) == _rowset(want.collect())
-
-
-def test_tws_state_echo_roundtrip(spark, tmp_path, rocksdb_state):
-    """Minimal ValueState + MapState echo across the micro-batch boundary:
-    batch 1 writes, batch 2 reads back and emits what it saw. Pins the
-    state-server protocol round-trip (incl. the vendored-protobuf skew
-    path) independently of the PnL fold, and specifically that a `long`
-    map-state field written as a Python int survives — the r7 bug was an
-    integral FLOAT silently decoding to NULL on the JVM side."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("note", T.StringType()),
-    ])
-
-    class Echo(StatefulProcessor):
-        def init(self, handle):
-            self._v = handle.getValueState("v", "price double")
-            self._m = handle.getMapState(
-                "m", "account string",
-                "pos long, avg double, realized double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            seen = None
-            if self._m.exists():
-                seen = sorted((k[0], tuple(v)) for k, v in self._m.iterator())
-            note = f"v={self._v.get()!r} m={seen!r}"
-            for _ in rows:
-                pass
-            self._v.update((42.5,))
-            self._m.updateValue(("a",), (7, 1.25, -3.5))
-            self._m.updateValue(("b",), (-2, 0.5, 9.0))
-            yield pd.DataFrame([{"key": key[0], "note": note}])
-
-        def handleInitialState(self, key, initialState, timer_values):
-            pass
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            return iter(())
-
-        def close(self):
-            pass
-
-    df = spark.createDataFrame([("h1", 1.0)], "hub string, x double")
-    df.coalesce(1).write.parquet(f"{tmp_path}/f0")
-    df.coalesce(1).write.parquet(f"{tmp_path}/f1")
-    stream = (spark.readStream.schema(df.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{tmp_path}/f*"))
-    out = (stream.groupBy("hub")
-           .transformWithStateInPandas(Echo(), out_schema, "append", "none"))
-    run_available_now(out, "tws_echo_out", f"{tmp_path}/ckpt")
-    notes = sorted(r.note for r in spark.sql(
-        "SELECT note FROM tws_echo_out").collect())
-    assert notes == [
-        "v=(42.5,) m=[('a', (7, 1.25, -3.5)), ('b', (-2, 0.5, 9.0))]",
-        "v=None m=None",
-    ]
-
-
-def test_book_puts_touched_keys_only():
-    """MapState writes per batch are O(touched accounts), not O(book),
-    and always typed (int, float, float) — incl. integral-float pos."""
-    from kafka_flink_processing_spark.streaming.stateful import book_puts
-
-    before = {"a": (7, 1.25, -3.5), "b": (-2, 0.5, 9.0)}
-    after = {"a": (7.0, 1.25, -3.5),      # untouched (integral float)
-             "b": (-3.0, 0.5, 9.0),       # position moved
-             "c": (1.0, 2.0, 0.0)}        # new account
-    puts = book_puts(before, after)
-    assert puts == {"b": (-3, 0.5, 9.0), "c": (1, 2.0, 0.0)}
-    assert all(type(v[0]) is int and type(v[1]) is float and
-               type(v[2]) is float for v in puts.values())
-    assert book_puts(before, dict(before)) == {}
 
 
 def test_streaming_sma_state_carries_across_batches(spark, market, tmp_path):
@@ -289,6 +169,62 @@ def test_pnl_job_writes_both_tables(spark, market, tmp_path):
     sample = joined.limit(5).collect()
     for r in sample:
         assert r.notional_usd is not None
+
+
+@pytest.mark.parametrize("job", ["pnl_job", "forecasts_job"])
+def test_job_folds_large_group_in_event_time_order(spark, tmp_path, job):
+    """A hub with more than spark.sql.execution.arrow.maxRecordsPerBatch
+    rows in one micro-batch reaches the stateful function as several
+    Arrow chunks. The files hold the rows newest first (and the price
+    that opens the tape after the trades), so folding chunk by chunk
+    would replay them out of event-time order; the job output must still
+    equal the batch plan's."""
+    import datetime as dt
+
+    def t(s):
+        return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)
+
+    n = 200
+    prices = spark.createDataFrame(
+        [(t(10 * i), "H", 50.0 + (7 * i) % 13, i) for i in range(n)],
+        "ts timestamp, hub string, price_mwh double, tick_id long")
+    trades = spark.createDataFrame(
+        [(i, t(10 * i + 5), f"ACC{i % 5}", "H",
+          "BUY" if i % 3 else "SELL", 5 * (1 + i % 4), 40.0 + i / 100)
+         for i in range(n)],
+        "trade_id long, ts timestamp, account string, hub string, "
+        "side string, mw long, price_mwh double")
+
+    def newest_first(df, base):
+        df.orderBy(F.col("ts").desc()).coalesce(1).write.parquet(base)
+        return spark.readStream.schema(df.schema).parquet(base)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    try:
+        px = newest_first(prices, f"{tmp_path}/p")
+        if job == "pnl_job":
+            q = pnl_job(newest_first(trades, f"{tmp_path}/t"), px,
+                        f"{tmp_path}/out", f"{tmp_path}/ckpt")
+            table = "positions_pnl"
+            want = pnl_positions(trades, prices)
+        else:
+            q = forecasts_job(px, f"{tmp_path}/out", f"{tmp_path}/ckpt",
+                              seq_col="tick_id")
+            table = "forecasts"
+            want = (rolling_sma_forecast(prices, ["hub"], ["ts", "tick_id"],
+                                         "price_mwh")
+                    .select("ts", "hub", "sma5", "sma20", "forecast_next"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, old)
+    got = spark.read.parquet(f"{tmp_path}/out/{table}/epoch=*")
+    assert got.count() == want.count()
+    assert _rowset(got.collect()) == _rowset(want.collect())
 
 
 def test_incremental_dedup_job_matches_batch_operator(spark):
@@ -428,17 +364,13 @@ def test_checkpoint_restart_carries_sma_state_no_duplicates(spark, market,
     assert _rowset(got.collect()) == _rowset(want.collect())
 
 
-def test_checkpoint_restart_carries_tws_rocksdb_state(spark, market,
-                                                      tmp_path,
-                                                      rocksdb_state):
-    """Same restart contract for the transformWithState port: the
-    RocksDB ValueState/MapState must restore from the checkpoint on a
-    fresh query, so the resumed fold continues the account book instead
-    of re-founding it — output equals the batch replay over the full
-    tape with no batch-1 duplicates."""
-    from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_pnl_tws,
-    )
+def test_checkpoint_restart_carries_pnl_state_no_duplicates(spark, market,
+                                                            tmp_path):
+    """Same restart contract for the PnL fold: the last price and the
+    account book must restore from the checkpoint on a fresh query, so
+    the resumed fold continues the book instead of re-founding it —
+    output equals the batch replay over the full tape with no batch-1
+    duplicates."""
     trades, prices = market
     allts = (trades.select("ts").unionByName(prices.select("ts"))
              .withColumn("o", F.col("ts").cast("double")))
@@ -458,7 +390,7 @@ def test_checkpoint_restart_carries_tws_rocksdb_state(spark, market,
             f"{tmp_path}/t/f*")
         px = spark.readStream.schema(prices.schema).parquet(
             f"{tmp_path}/p/f*")
-        q = (streaming_pnl_tws(ts, px)
+        q = (streaming_pnl(ts, px)
              .writeStream.format("parquet").option("path", out)
              .option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True).start())
@@ -476,86 +408,23 @@ def test_checkpoint_restart_carries_tws_rocksdb_state(spark, market,
     assert _rowset(got.collect()) == _rowset(want.collect())
 
 
-def test_streaming_sma_tws_matches_batch(spark, market, tmp_path,
-                                         rocksdb_state):
-    """The transformWithState W1 port (REAL ListState ring buffer,
-    reference ForecastsJob.java:77-81 layout) must reproduce the batch
-    window plan bit-exactly, like the applyInPandasWithState original."""
-    from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_sma_forecast_tws,
-    )
-    _, prices = market
-    prices = prices.withColumn("seq", F.lit(0).cast("long"))
-    stream = _stream_from(spark, prices, str(tmp_path))
-    fc = streaming_sma_forecast_tws(stream, seq_col="seq")
-    run_available_now(fc, "sma_tws_out", f"{tmp_path}/ckpt")
-    got = spark.sql("SELECT ts, hub, price_mwh, sma5, sma20, forecast_next "
-                    "FROM sma_tws_out")
-    want = (rolling_sma_forecast(
-        prices.select("ts", "hub", "price_mwh", "seq"),
-        ["hub"], ["ts", "seq"], "price_mwh")
-        .select("ts", "hub", "price_mwh", "sma5", "sma20", "forecast_next"))
-    assert _rowset(got.collect()) == _rowset(want.collect())
-
-
-def test_checkpoint_restart_carries_sma_tws_liststate(spark, market,
-                                                      tmp_path,
-                                                      rocksdb_state):
-    """Restart contract for the W1 tws port: the RocksDB ListState ring
-    buffer must restore from the checkpoint on a fresh query — the
-    resumed fold continues the window (not a cold 1-element buffer) and
-    batch-1 rows must not re-emit."""
-    from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_sma_forecast_tws,
-    )
-    _, prices = market
-    one_hub = prices.filter(F.col("hub") == "HUB0") \
-                    .withColumn("seq", F.lit(0).cast("long"))
-    o = F.col("ts").cast("double")
-    cut = one_hub.select(o.alias("o")).approxQuantile("o", [0.5], 0.0)[0]
-    src, out, ckpt = f"{tmp_path}/src", f"{tmp_path}/out", f"{tmp_path}/ckpt"
-    one_hub.filter(o <= cut).coalesce(1).write.parquet(f"{src}/f0")
-
-    def run_once():
-        stream = (spark.readStream.schema(one_hub.schema)
-                  .parquet(f"{src}/f*"))
-        q = (streaming_sma_forecast_tws(stream, seq_col="seq")
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    run_once()                                     # batch 1
-    n_first = spark.read.parquet(out).count()
-    one_hub.filter(o > cut).coalesce(1).write.parquet(f"{src}/f1")
-    run_once()                                     # restart from checkpoint
-    got = spark.read.parquet(out).select("ts", "hub", "sma5", "sma20")
-    want = (rolling_sma_forecast(one_hub, ["hub"], ["ts", "seq"],
-                                 "price_mwh")
-            .select("ts", "hub", "sma5", "sma20"))
-    assert 0 < n_first < want.count()              # both runs contributed
-    assert got.count() == want.count()             # no dup re-emission
-    assert _rowset(got.collect()) == _rowset(want.collect())
-
-
-def test_pnl_tws_ttl_evicts_long_flat_accounts(spark, tmp_path,
-                                               rocksdb_state):
-    """Book-expiry TTL (PnlProcessorTtl): an account flat for > TTL of
-    event time is evicted by an event-time timer, so later price ticks
+def test_pnl_ttl_evicts_long_flat_accounts(spark, tmp_path):
+    """Book-expiry TTL (streaming_pnl_ttl): an account flat for > TTL of
+    event time is evicted once the watermark passes, so later price ticks
     stop fanning out rows for it — the state-growth mitigation at
     account churn. Accounts with open positions are never evicted.
 
     Tape (hub H, TTL = 60 s, watermark delay 0):
-      b1: A buys 5 then sells 5 (flat at 10:00:30 -> timer 10:01:30),
+      b1: A buys 5 then sells 5 (flat at 10:00:30 -> expiry 10:01:30),
           B buys 3 (open), tick 10:02 (A+B rows; watermark still 0)
-      b2: tick 10:03 — watermark is now 10:02 > timer, so A is evicted
-          this batch
+      b2: tick 10:03 — watermark is now 10:02 > expiry, so A is evicted
+          after this batch's fold
       b3: tick 10:04 — only B fans out
     """
     import datetime as dt
 
     from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_pnl_tws_ttl,
+        streaming_pnl_ttl,
     )
 
     def t(s):
@@ -580,7 +449,7 @@ def test_pnl_tws_ttl_evicts_long_flat_accounts(spark, tmp_path,
     px = (spark.readStream.schema(spark.createDataFrame([], px_schema)
                                   .schema)
           .option("maxFilesPerTrigger", 1).parquet(f"{tmp_path}/p/f*"))
-    out = streaming_pnl_tws_ttl(ts, px, ttl_ms=60_000)
+    out = streaming_pnl_ttl(ts, px, ttl_ms=60_000)
     run_available_now(out, "pnl_ttl_out", f"{tmp_path}/ckpt")
     got = spark.sql("SELECT * FROM pnl_ttl_out").collect()
 
@@ -600,27 +469,72 @@ def test_pnl_tws_ttl_evicts_long_flat_accounts(spark, tmp_path,
     assert t(240) not in {r.ts for r in a_rows}
 
 
-def test_pnl_tws_ttl_restart_fires_timers_at_drain_end(spark, tmp_path,
-                                                       rocksdb_state):
+def test_pnl_ttl_expiry_is_due_at_an_equal_watermark(spark, tmp_path):
+    """An expiry is due once the watermark is >= it, equality included
+    (tools/stream_fuzz.py::_pnl_ttl_spec), while a group timeout fires
+    only strictly below the watermark. Tape (TTL = 60 s, delay 0):
+
+      b1: on hub H, A buys 5 / sells 5 at 10:00:00 (flat, expiry
+          10:01:00) and B buys 3 (open); a tick on hub G at 10:01:00
+      b2: a tick on G only — the watermark is now EXACTLY 10:01:00, so
+          H's timeout must fire and evict A although H has no rows
+      b3: a tick on H — only B fans out
+    """
+    import datetime as dt
+
+    from kafka_flink_processing_spark.streaming.stateful import (
+        streaming_pnl_ttl,
+    )
+
+    def t(s):
+        return dt.datetime(2024, 1, 1, 10, 0, 0) + dt.timedelta(seconds=s)
+
+    trades = spark.createDataFrame(
+        [(1, t(0), "A", "H", "BUY", 5, 50.0),
+         (2, t(0), "A", "H", "SELL", 5, 51.0),
+         (3, t(0), "B", "H", "BUY", 3, 52.0)],
+        "trade_id long, ts timestamp, account string, hub string, "
+        "side string, mw long, price_mwh double")
+    px_schema = "ts timestamp, hub string, price_mwh double"
+    ticks = [(t(60), "G", 53.0), (t(70), "G", 54.0), (t(80), "H", 55.0)]
+
+    trades.coalesce(1).write.parquet(f"{tmp_path}/t/f0")
+    for i, row in enumerate(ticks):
+        spark.createDataFrame([row], px_schema).coalesce(1) \
+            .write.parquet(f"{tmp_path}/p/f{i}")
+    ts = (spark.readStream.schema(trades.schema)
+          .option("maxFilesPerTrigger", 1).parquet(f"{tmp_path}/t/f*"))
+    px = (spark.readStream.schema(spark.createDataFrame([], px_schema)
+                                  .schema)
+          .option("maxFilesPerTrigger", 1).parquet(f"{tmp_path}/p/f*"))
+    out = streaming_pnl_ttl(ts, px, ttl_ms=60_000)
+    run_available_now(out, "pnl_ttl_eq_out", f"{tmp_path}/ckpt")
+    got = spark.sql("SELECT ts, account FROM pnl_ttl_eq_out "
+                    "WHERE hub = 'H'").collect()
+    assert {r.account for r in got if r.ts == t(80)} == {"B"}
+
+
+def test_pnl_ttl_restart_fires_timeouts_at_drain_end(spark, tmp_path):
     """The drain-end NO-DATA microbatch (the r10 events_churn fuzz find,
     minimal committed form): an availableNow drain appends one no-data
-    batch once the watermark has advanced, so a timer whose expiry the
-    PHASE-1 watermark already covers fires at the END of phase 1 — NOT
-    after phase 2's first input rows. Tape (TTL = 60 s, delay 0):
+    batch once the watermark has advanced, so a group timeout whose
+    expiry the PHASE-1 watermark already covers fires at the END of
+    phase 1 — NOT after phase 2's first input rows. Tape (TTL = 60 s,
+    delay 0):
 
-      phase 1 (one batch): A buys 5 / sells 5 (flat at 10:00:10, timer
+      phase 1 (one batch): A buys 5 / sells 5 (flat at 10:00:10, expiry
         10:01:10), B buys 3 (open), tick 10:01:40 — the batch's own
         watermark is still 0, so A fans out on that tick; then the
-        drain-end no-data batch runs with wm = 10:01:40 > timer and
-        EVICTS A.
-      phase 2 (restart from the checkpoint): tick 10:01:50 — if timers
-        only fired after input rows, A would fan out here one last time;
+        drain-end no-data batch runs with wm = 10:01:40 > expiry, the
+        hub's timeout fires and EVICTS A.
+      phase 2 (restart from the checkpoint): tick 10:01:50 — if eviction
+        only ran after input rows, A would fan out here one last time;
         the drain-end semantics say it must NOT. B always does.
     """
     import datetime as dt
 
     from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_pnl_tws_ttl,
+        streaming_pnl_ttl,
     )
 
     def t(s):
@@ -641,7 +555,7 @@ def test_pnl_tws_ttl_restart_fires_timers_at_drain_end(spark, tmp_path,
         px = (spark.readStream
               .schema(spark.createDataFrame([], px_schema).schema)
               .parquet(f"{tmp_path}/p/f*"))
-        q = (streaming_pnl_tws_ttl(ts, px, ttl_ms=60_000)
+        q = (streaming_pnl_ttl(ts, px, ttl_ms=60_000)
              .writeStream.format("parquet").option("path", out)
              .option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True).start())

@@ -59,10 +59,10 @@ DEDUP_QUERY_SET = ["dedup_clusters", "dup_span_redact", "dedup_fuzzy_corpus"]
 # VERBATIM replication (same vocabulary, k-fold frequencies — the honest
 # Zipf shape of a growing corpus: the distinct-word relation the trainer
 # and encoder iterate over stays constant-size, only the one corpus-sized
-# groupBy/explode grows), and the tws SMA port drains k-fold ticks
-# through the ListState fold (state stays O(hubs x 20), output linear).
+# groupBy/explode grows), and the streaming SMA drains k-fold ticks
+# through the ring-buffer fold (state stays O(hubs x 20), output linear).
 R9_QUERY_SET = ["bpe_encode_tokens", "bpe_vocab_coverage",
-                "data_mix_subword_budget", "streaming_forecast_sma_tws",
+                "data_mix_subword_budget", "streaming_forecast_sma",
                 "bpe_vocab_merges_batched"]
 # --dsir mode (r9 end): DSIR importance weights on VERBATIM replication
 # (k-fold docs, same text population — the hashed-bucket log-ratio table

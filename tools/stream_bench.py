@@ -75,9 +75,10 @@ def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
     `build(streams)` returns the output stream. The sink is a foreachBatch
     count — one action per batch, so numInputRows here IS the true row
     count (unlike the multi-action corpus jobs below). Each epoch also
-    records the state store's total rows (stateOperators.numRowsTotal):
-    for watermark-bounded operators the claim is a PLATEAU — state tracks
-    the watermark lag x rate, not accumulated history."""
+    records the state store's total rows and bytes
+    (stateOperators.numRowsTotal / memoryUsedBytes): for
+    watermark-bounded operators the claim is a PLATEAU — state tracks the
+    watermark lag x rate, not accumulated history."""
     per_epoch_out = []
 
     def drain(batch, epoch):
@@ -98,7 +99,9 @@ def run_stateful(spark, label, build, sources, n_epochs=N_EPOCHS):
     epochs = [{"rows": p["numInputRows"],
                "sec": round(p["durationMs"]["triggerExecution"] / 1e3, 3),
                "state_rows": (p["stateOperators"][0]["numRowsTotal"]
-                              if p.get("stateOperators") else None)}
+                              if p.get("stateOperators") else None),
+               "state_bytes": (p["stateOperators"][0]["memoryUsedBytes"]
+                               if p.get("stateOperators") else None)}
               for p in prog if p["numInputRows"] > 0]
     # epoch 1 carries python-worker spin-up + state-store init
     steady = epochs[1:] if len(epochs) > 1 else epochs
@@ -160,20 +163,20 @@ def run_job(spark, job, corpus, increment, label):
 def run_ttl_state(spark):
     """Part 4 (r10): QUANTIFY the TTL's state-growth win. A 16-epoch
     account-CHURN tape — 250 fresh accounts per epoch trade flat and
-    never return, four ticks close each epoch — drives the same tws
-    engine twice: no TTL (the reference's semantics: the book grows
-    forever, every tick fans out every account ever seen) vs a
-    2-epoch-span TTL (flat accounts evicted once the watermark passes
-    last-trade + TTL). The claims under test, read off
-    stateOperators.numRowsTotal: no-TTL state grows LINEARLY in epochs
-    (~2 rows per account x 250/epoch + hubs), TTL state PLATEAUS at the
+    never return, four ticks close each epoch — drives the PnL fold
+    twice: streaming_pnl (the reference's semantics: the book grows
+    forever, every tick fans out every account ever seen) vs
+    streaming_pnl_ttl with a 2-epoch-span TTL (flat accounts evicted once
+    the watermark passes last-trade + TTL). Each hub's book is ONE state
+    row, so the claims are read off stateOperators.memoryUsedBytes:
+    no-TTL state grows LINEARLY in epochs, TTL state PLATEAUS at the
     ~2-epoch active window; and the no-TTL OUTPUT (tick fan-out) grows
     quadratically-ish across the tape while TTL output stays flat."""
     import datetime as dt
 
     from kafka_flink_processing_spark.streaming.stateful import (
-        streaming_pnl_tws,
-        streaming_pnl_tws_ttl,
+        streaming_pnl,
+        streaming_pnl_ttl,
     )
 
     base = dt.datetime(2024, 1, 1)
@@ -197,34 +200,18 @@ def run_ttl_state(spark):
     prices = spark.createDataFrame(
         prows, "ts timestamp, hub string, price_mwh double, tick_id long")
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
-        run_stateful(spark, "pnl_tws_no_ttl_churn",
-                     lambda s: streaming_pnl_tws(s["t"], s["p"]),
-                     {"t": trades, "p": prices}, n_epochs=N_EP)
-        run_stateful(spark, "pnl_tws_ttl_2epoch_churn",
-                     lambda s: streaming_pnl_tws_ttl(s["t"], s["p"],
-                                                     ttl_ms=2 * W * 1000),
-                     {"t": trades, "p": prices}, n_epochs=N_EP)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    run_stateful(spark, "pnl_no_ttl_churn",
+                 lambda s: streaming_pnl(s["t"], s["p"]),
+                 {"t": trades, "p": prices}, n_epochs=N_EP)
+    run_stateful(spark, "pnl_ttl_2epoch_churn",
+                 lambda s: streaming_pnl_ttl(s["t"], s["p"],
+                                             ttl_ms=2 * W * 1000),
+                 {"t": trades, "p": prices}, n_epochs=N_EP)
 
 
 def main():
     spark = get_spark("stream-bench")
     if "--ttl" in sys.argv[1:]:
-        from kafka_flink_processing_spark.session import ensure_tws_ready
-        if not ensure_tws_ready(spark):
-            raise SystemExit("transformWithState unavailable on this box")
         run_ttl_state(spark)
         return
     sf01 = "/root/testdata/sf0.1"

@@ -14,33 +14,31 @@ whose memory table is replaced each trigger.
 EVENT-corpora engines (ties/extreme/sparse/skew):
 
   pnl          streaming_pnl      (applyInPandasWithState, JSON book)
-  pnl_tws      streaming_pnl_tws  (transformWithState, ValueState+MapState)
-  pnl_tws_ttl  TTL variant with a never-expiring TTL: must DEGENERATE to
-               the non-TTL book while driving timer registration, the
-               lastTrade MapState, and the eventtime/watermark wiring
+  pnl_ttl      streaming_pnl_ttl with a never-expiring TTL: must
+               DEGENERATE to the non-TTL book while driving the
+               last-trade bookkeeping, the event-time timeout and the
+               watermark wiring
   sma          streaming_sma_forecast      (applyInPandasWithState ring)
-  sma_tws      streaming_sma_forecast_tws  (transformWithState ListState)
   tumbling     1h-window agg, complete mode — tumbling partials UPDATED
                by later batches (the registered streaming window queries
                stage one micro-batch, so this state had no coverage)
   session      30min-gap session windows, complete mode — sessions
                MERGING when a later batch extends them
-  pnl_tws_ttl_finite
+  pnl_ttl_finite
                the ACTUAL eviction path: a small grid-aligned TTL over
                six micro-batches, checked against a deterministic
-               pure-Python replay of PnlProcessorTtl (watermark, timers,
-               sweep eviction, re-trade-from-zero) — see _pnl_ttl_spec
-  pnl_restart / pnl_tws_restart
-               two-phase file-sink drains from the SAME checkpoint with a
+               pure-Python replay of streaming_pnl_ttl (watermark,
+               timers, sweep eviction, re-trade-from-zero) — see
+               _pnl_ttl_spec
+  pnl_restart  two-phase file-sink drain from the SAME checkpoint with a
                stop between: adversarial STATE CONTENT (NaN last-prices
-               in the JSON book, extreme doubles through the RocksDB row
-               encoders) must survive the checkpoint round-trip with no
-               batch-1 re-emission
-  pnl_tws_ttl_restart
+               and extreme doubles in the JSON book) must survive the
+               checkpoint round-trip with no batch-1 re-emission
+  pnl_ttl_restart
                the finite-TTL engine through the same two-phase restart:
-               timer registrations, watermark, and the lastTrade MapState
-               must survive the checkpoint; evicted accounts re-trading
-               in phase 2 must restart from a zero fold
+               group timeouts, watermark, and the last-trade book must
+               survive the checkpoint; evicted accounts re-trading in
+               phase 2 must restart from a zero fold
 
 vs pnl_positions / rolling_sma_forecast / the identical agg expression in
 batch. The r8 PnL determinism bug (same-timestamp ticks made last-price
@@ -96,12 +94,8 @@ from kafka_flink_processing_spark.session import get_spark  # noqa: E402
 from kafka_flink_processing_spark.sources.parquet import load_table  # noqa: E402
 from kafka_flink_processing_spark.streaming.sinks import run_available_now  # noqa: E402
 
-_ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-ENGINES = ("pnl", "pnl_tws", "pnl_tws_ttl", "pnl_tws_ttl_finite",
-           "sma", "sma_tws", "tumbling", "session",
-           "pnl_restart", "pnl_tws_restart", "pnl_tws_ttl_restart")
+ENGINES = ("pnl", "pnl_ttl", "pnl_ttl_finite", "sma", "tumbling",
+           "session", "pnl_restart", "pnl_ttl_restart")
 
 # documents-family engines: the streaming ingest-guard JOBS
 # (foreachBatch fan-out to epoch-partitioned dups/accepted sinks) have
@@ -113,17 +107,17 @@ ENGINES = ("pnl", "pnl_tws", "pnl_tws_ttl", "pnl_tws_ttl_finite",
 DOC_ENGINES = ("inc_dedup", "decon", "ccnet_filter")
 DOC_CORPORA = ("edge_ascii", "random_ascii", "zipf_dup", "unicode")
 
-# pnl_tws_ttl runs with a TTL far beyond any corpus's event-time span, so
-# no timer can expire during the drain and the output must DEGENERATE to
-# the non-TTL book exactly — the check still drives the timer
-# registration path and the lastTrade MapState (typed puts, flat-account
-# detection) under every adversarial corpus, plus the eventtime/watermark
-# wiring the other engines don't use. (A small TTL diverges from batch BY
-# DESIGN — eviction is the point — so it cannot be checked against the
-# batch engine; the pnl_tws_ttl_finite engine below checks the actual
-# eviction path against the deterministic _pnl_ttl_spec replay instead,
-# and tests/test_streaming.py::test_pnl_tws_ttl_evicts_long_flat_accounts
-# pins the clean-tape behavior.)
+# pnl_ttl runs with a TTL far beyond any corpus's event-time span, so
+# nothing can expire during the drain and the output must DEGENERATE to
+# the non-TTL book exactly — the check still drives the timeout path and
+# the last-trade book (flat-account detection) under every adversarial
+# corpus, plus the watermark wiring the other engines don't use. (A
+# small TTL diverges from batch BY DESIGN — eviction is the point — so it
+# cannot be checked against the batch engine; the pnl_ttl_finite engine
+# below checks the actual eviction path against the deterministic
+# _pnl_ttl_spec replay instead, and
+# tests/test_streaming.py::test_pnl_ttl_evicts_long_flat_accounts pins
+# the clean-tape behavior.)
 _TTL_NEVER_MS = 10 ** 12  # ~31 years of event time
 
 
@@ -186,46 +180,23 @@ def _drain(spark, df: DataFrame, name: str, ckpt: str,
     return _rowbag(rows) if output_mode == "append" else _rowset(rows)
 
 
-class _rocksdb_provider:
-    """transformWithState needs the RocksDB store; restore the session's
-    previous provider afterwards so the applyInPandasWithState drains
-    keep running on whatever the session had (mirrors the test fixture)."""
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get(_PROVIDER_KEY)
-        except Exception:
-            self.prev = None
-        self.spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(_PROVIDER_KEY)
-        else:
-            self.spark.conf.set(_PROVIDER_KEY, self.prev)
-        return False
-
-
 # ---------------------------------------------------------------------------
 # Finite-TTL spec replay (r9 verdict task 5): the never-expiring TTL
 # degeneration above proves the wiring, but the actual EVICTION path was
 # only ever tested on one clean 3-account tape. A finite TTL cannot be
 # parity-checked against the batch engine (eviction diverges BY DESIGN),
-# so the oracle is a deterministic pure-Python replay of PnlProcessorTtl
+# so the oracle is a deterministic pure-Python replay of the TTL book
 # over the exact staged micro-batch composition, built on the same shared
-# HubFold the engine and the batch operator use. The three engine-timing
-# facts it encodes were pinned by direct probes against the real engine
-# (Spark 4.1, availableNow, maxFilesPerTrigger=1, delay 0s):
+# HubFold the engine and the batch operator use. The engine-timing facts
+# it encodes (Spark 4.1, availableNow, maxFilesPerTrigger=1, delay 0s):
 #   1. watermark for batch k = floor-ms(max event ts over batches < k)
 #      (the union's single watermark column, both sources);
-#   2. a timer fires in the first batch whose watermark is >= its expiry
-#      (equality fires: probed with wm == expiry exactly);
-#   3. expired timers are processed AFTER that batch's input rows (a tick
-#      in the firing batch still fans out the about-to-be-evicted
-#      account; probed).
+#   2. an account's expiry (last trade + TTL) is due in the first batch
+#      whose watermark is >= it — equality included. A group timeout
+#      fires only strictly below the watermark, so streaming_pnl_ttl
+#      sets it 1 ms before the earliest pending expiry;
+#   3. eviction runs AFTER that batch's input rows (a tick in the due
+#      batch still fans out the about-to-be-evicted account).
 # Under _split_stream staging a newly registered timer can never already
 # be expired (batch-k rows have ts > every prior batch's max), so the
 # register-then-sweep order within a batch is unobservable here.
@@ -277,7 +248,7 @@ def _split_batches(recs: list[dict], cuts: list[float]) -> list[list[dict]]:
 
 def _pnl_ttl_spec(batches: list[list[dict] | None],
                   ttl_ms: int) -> list[dict]:
-    """Deterministic replay of PnlProcessorTtl (streaming/stateful.py)
+    """Deterministic replay of streaming_pnl_ttl (streaming/stateful.py)
     over explicit micro-batches: per batch, per hub — fold rows in the
     documented (ts, kind, trade_id) total order via the SHARED HubFold,
     record last-trade ms, register flat-account timers at last-flat-ms +
@@ -289,8 +260,8 @@ def _pnl_ttl_spec(batches: list[list[dict] | None],
     A `None` entry is the NO-DATA microbatch Spark appends at the end of
     an availableNow drain once the watermark has advanced
     (spark.sql.streaming.noDataMicroBatches.enabled, default true): the
-    watermark catches up to everything seen and expired timers fire with
-    NO input rows first. Within a single drain this is output-invisible
+    watermark catches up to everything seen and due group timeouts fire
+    with NO input rows first. Within a single drain this is output-invisible
     (firing emits nothing, and there is no later input to suppress), but
     ACROSS a stop/restart it is load-bearing: phase-1 timers fire at the
     end of phase 1, before phase 2's input — the restart engines place a
@@ -387,8 +358,7 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
                  .select(F.col("ts").cast("double").alias("o")))
         cuts = sorted(set(allts.approxQuantile("o", [1 / 3, 2 / 3], 0.0)))
 
-        if {"pnl", "pnl_tws", "pnl_tws_ttl",
-                "pnl_restart", "pnl_tws_restart"} & set(engines):
+        if {"pnl", "pnl_ttl", "pnl_restart"} & set(engines):
             want_pnl = _rowbag(pnl_positions(trades, prices).collect())
         if "pnl" in engines:
             from kafka_flink_processing_spark.streaming.stateful import (
@@ -401,32 +371,19 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
                     _split_stream(spark, prices, f"{work}/pp", cuts)),
                 f"sfz_{tag}_pnl", f"{work}/ck_pnl")
             results.append(("pnl", got == want_pnl))
-        if "pnl_tws" in engines:
+        if "pnl_ttl" in engines:
             from kafka_flink_processing_spark.streaming.stateful import (
-                streaming_pnl_tws,
+                streaming_pnl_ttl,
             )
-            with _rocksdb_provider(spark):
-                got = _drain(
-                    spark,
-                    streaming_pnl_tws(
-                        _split_stream(spark, trades, f"{work}/tt", cuts),
-                        _split_stream(spark, prices, f"{work}/tp", cuts)),
-                    f"sfz_{tag}_pnl_tws", f"{work}/ck_pnl_tws")
-            results.append(("pnl_tws", got == want_pnl))
-        if "pnl_tws_ttl" in engines:
-            from kafka_flink_processing_spark.streaming.stateful import (
-                streaming_pnl_tws_ttl,
-            )
-            with _rocksdb_provider(spark):
-                got = _drain(
-                    spark,
-                    streaming_pnl_tws_ttl(
-                        _split_stream(spark, trades, f"{work}/lt", cuts),
-                        _split_stream(spark, prices, f"{work}/lp", cuts),
-                        ttl_ms=_TTL_NEVER_MS),
-                    f"sfz_{tag}_pnl_tws_ttl", f"{work}/ck_pnl_tws_ttl")
-            results.append(("pnl_tws_ttl", got == want_pnl))
-        if "pnl_tws_ttl_finite" in engines:
+            got = _drain(
+                spark,
+                streaming_pnl_ttl(
+                    _split_stream(spark, trades, f"{work}/lt", cuts),
+                    _split_stream(spark, prices, f"{work}/lp", cuts),
+                    ttl_ms=_TTL_NEVER_MS),
+                f"sfz_{tag}_pnl_ttl", f"{work}/ck_pnl_ttl")
+            results.append(("pnl_ttl", got == want_pnl))
+        if "pnl_ttl_finite" in engines:
             # the ACTUAL eviction path under adversity (r9 verdict task
             # 5): a finite TTL diverges from batch BY DESIGN, so the
             # oracle is the deterministic _pnl_ttl_spec replay over the
@@ -435,7 +392,7 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
             # shared 3-batch split, so evictions and re-trades of the
             # same account interleave across several boundaries.
             from kafka_flink_processing_spark.streaming.stateful import (
-                streaming_pnl_tws_ttl,
+                streaming_pnl_ttl,
             )
             t_rows = trades.collect()
             p_rows = prices.collect()
@@ -445,18 +402,16 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
             recs = _tagged_records(t_rows, p_rows)
             want_ttl = _dictbag(
                 _pnl_ttl_spec(_split_batches(recs, cuts6), ttl_ms))
-            with _rocksdb_provider(spark):
-                got = _drain(
-                    spark,
-                    streaming_pnl_tws_ttl(
-                        _split_stream(spark, trades, f"{work}/ft", cuts6),
-                        _split_stream(spark, prices, f"{work}/fp", cuts6),
-                        ttl_ms=ttl_ms),
-                    f"sfz_{tag}_pnl_tws_ttl_finite",
-                    f"{work}/ck_pnl_tws_ttl_finite")
-            results.append(("pnl_tws_ttl_finite", got == want_ttl))
+            got = _drain(
+                spark,
+                streaming_pnl_ttl(
+                    _split_stream(spark, trades, f"{work}/ft", cuts6),
+                    _split_stream(spark, prices, f"{work}/fp", cuts6),
+                    ttl_ms=ttl_ms),
+                f"sfz_{tag}_pnl_ttl_finite", f"{work}/ck_pnl_ttl_finite")
+            results.append(("pnl_ttl_finite", got == want_ttl))
 
-        if "sma" in engines or "sma_tws" in engines:
+        if "sma" in engines:
             # seq = tick_id: a TOTAL rolling order under same-ts ticks in
             # both engines (seq=0 would leave ties ambiguous on BOTH
             # sides — a spec gap, not a state bug, so close it here)
@@ -468,7 +423,6 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
                                      "price_mwh")
                 .select("ts", "hub", "price_mwh", "sma5", "sma20",
                         "forecast_next").collect())
-        if "sma" in engines:
             from kafka_flink_processing_spark.streaming.stateful import (
                 streaming_sma_forecast,
             )
@@ -479,18 +433,6 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
                     seq_col="seq"),
                 f"sfz_{tag}_sma", f"{work}/ck_sma")
             results.append(("sma", got == want_sma))
-        if "sma_tws" in engines:
-            from kafka_flink_processing_spark.streaming.stateful import (
-                streaming_sma_forecast_tws,
-            )
-            with _rocksdb_provider(spark):
-                got = _drain(
-                    spark,
-                    streaming_sma_forecast_tws(
-                        _split_stream(spark, p2, f"{work}/st", cuts),
-                        seq_col="seq"),
-                    f"sfz_{tag}_sma_tws", f"{work}/ck_sma_tws")
-            results.append(("sma_tws", got == want_sma))
         # windowed aggregations, complete mode: the registered streaming
         # window queries drain ONE micro-batch (drain_streaming_result's
         # single-file staging), so neither fuzzer has exercised window
@@ -542,14 +484,13 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
 
         # checkpoint-restart under adversity: the committed restart tests
         # (tests/test_streaming.py) prove the resume mechanics on CLEAN
-        # data; only nasty corpora put NaN last-prices into the JSON book
-        # state and extreme doubles through the RocksDB row encoders, so
-        # the checkpoint ROUND-TRIP of adversarial state content is its
-        # own axis. Two-phase drain: f0 -> file sink + checkpoint, STOP,
+        # data; only nasty corpora put NaN last-prices and extreme doubles
+        # into the JSON book state, so the checkpoint ROUND-TRIP of
+        # adversarial state content is its own axis. Two-phase drain:
+        # f0 -> file sink + checkpoint, STOP,
         # land f1, fresh query from the SAME checkpoint; the combined
         # sink must equal the batch replay with no batch-1 re-emission.
-        if {"pnl_restart", "pnl_tws_restart",
-                "pnl_tws_ttl_restart"} & set(engines):
+        if {"pnl_restart", "pnl_ttl_restart"} & set(engines):
             mid = [cuts[len(cuts) // 2]] if cuts else []
 
             def _stage_part(df, base, part):
@@ -602,26 +543,17 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
                 results.append((
                     "pnl_restart",
                     _restart_parity(streaming_pnl, f"{work}/rs_pnl")))
-            if "pnl_tws_restart" in engines:
-                from kafka_flink_processing_spark.streaming.stateful import (
-                    streaming_pnl_tws,
-                )
-                with _rocksdb_provider(spark):
-                    results.append((
-                        "pnl_tws_restart",
-                        _restart_parity(streaming_pnl_tws,
-                                        f"{work}/rs_tws")))
-            if "pnl_tws_ttl_restart" in engines:
+            if "pnl_ttl_restart" in engines:
                 # eviction state itself must survive the checkpoint
-                # round-trip: phase 1 registers timers (and possibly
+                # round-trip: phase 1 sets group timeouts (and possibly
                 # evicts), the query STOPS, phase 2 resumes from the
-                # checkpoint — watermark, timer registrations, and the
-                # lastTrade MapState all restored — then re-trades
+                # checkpoint — watermark, timeouts, and the last-trade
+                # book all restored — then re-trades
                 # evicted accounts (which must restart from a ZERO fold,
                 # realized reset). Oracle = the same _pnl_ttl_spec over
                 # the two-phase batch composition.
                 from kafka_flink_processing_spark.streaming.stateful import (
-                    streaming_pnl_tws_ttl,
+                    streaming_pnl_ttl,
                 )
                 t_rows2 = trades.collect()
                 p_rows2 = prices.collect()
@@ -629,17 +561,16 @@ def run_corpus(spark, cname: str, seed: int, engines: list[str],
                 ph = _split_batches(_tagged_records(t_rows2, p_rows2),
                                     mid)
                 # phase 1 drain ends with Spark's no-data microbatch:
-                # its timer sweep runs BEFORE phase 2's input (None
+                # its timeout sweep runs BEFORE phase 2's input (None
                 # sentinel; see _pnl_ttl_spec)
                 batches_rs = [ph[0], None] + ph[1:] if len(ph) > 1 else ph
                 want_ttl_rs = _dictbag(_pnl_ttl_spec(batches_rs, ttl2))
-                with _rocksdb_provider(spark):
-                    results.append((
-                        "pnl_tws_ttl_restart",
-                        _restart_parity(
-                            lambda ts_, px_: streaming_pnl_tws_ttl(
-                                ts_, px_, ttl_ms=ttl2),
-                            f"{work}/rs_ttl", want=want_ttl_rs)))
+                results.append((
+                    "pnl_ttl_restart",
+                    _restart_parity(
+                        lambda ts_, px_: streaming_pnl_ttl(
+                            ts_, px_, ttl_ms=ttl2),
+                        f"{work}/rs_ttl", want=want_ttl_rs)))
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return results
